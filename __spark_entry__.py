@@ -2,7 +2,9 @@
 
 ``entry(spark)`` runs the flagship Q1-shape aggregation on sf0.001;
 ``queries()`` / ``oracle_sql()`` expose the operator registry populated by
-importing :mod:`bigdatawork_spark` (one entry per SURVEY.md §2 key).
+importing :mod:`bigdatawork_spark`, in registration order (one entry per
+SURVEY.md §2 key, then the extended keys).  Neither call reads a file or
+inspects source: both are plain copies of the registry maps.
 """
 
 from __future__ import annotations
@@ -15,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bigdatawork_spark.registry import ORACLES, QUERIES, driver_order  # noqa: E402
+from bigdatawork_spark.registry import ORACLES, QUERIES  # noqa: E402
 from bigdatawork_spark.session import ensure_tuned  # noqa: E402
 import bigdatawork_spark  # noqa: F401, E402  (populates the registry)
 
@@ -23,7 +25,7 @@ import bigdatawork_spark  # noqa: F401, E402  (populates the registry)
 def _tuned(fn: Callable) -> Callable:
     """Guarantee session tuning (UTC tz, AQE, shuffle sizing) before ANY
     builder runs — some builders synthesize data inline and never touch
-    io.load, and the self-rotating order may put one of them first."""
+    io.load, and the driver may call one of them first."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         return fn(ensure_tuned(spark), sf_dir)
@@ -39,14 +41,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Ordered so not-yet-driver-verified SURVEY §2 contract keys come first:
-    the round-1 driver truncated at the first 50 keys, so insertion order
-    IS the verification budget (registry.DRIVER_PRIORITY)."""
-    return {k: _tuned(fn) for k, fn in driver_order(QUERIES).items()}
+    """One entry per implemented operator, in registration order."""
+    return {k: _tuned(fn) for k, fn in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable oracle SQL for each SQL-expressible key."""
-    return driver_order(ORACLES)
+    """DuckDB-runnable oracle SQL for each SQL-expressible key, in
+    registration order."""
+    return dict(ORACLES)

@@ -1160,8 +1160,9 @@ def dedup_repeated_spans(spark, sf_dir):
     8.2-8.6 s, output verified row-identical (49 890 spans both forms;
     oracle HASH green at sf0.01/0.1).  Cross-engine divergence would
     need a 64-bit collision among the corpus's distinct grams that md5
-    does not share (~1e-8 at sf1.0's gram count) — same accepted-risk
-    class as the jaccard gram ids."""
+    does not share (~1e-5 at sf1.0: the birthday bound n²/2⁶⁵ with
+    n ≤ 27M distinct grams is at most 2e-5) — same accepted-risk class as
+    the jaccard gram ids."""
     d = (
         load(spark, sf_dir, "documents")
         .filter("text is not null and length(text) >= 20")

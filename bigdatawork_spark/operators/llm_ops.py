@@ -281,6 +281,11 @@ _SCORER_MEMO_ATTR = "_bigdatawork_scorer_corpus_memo"
 
 
 def _corpus_broadcast(spark, key: str, sf_dir: str, build):
+    """``(broadcast, frame)`` for ``build() -> (broadcast, pandas frame)``,
+    memoized per session.  The collected frame (~26 MB at the twin cap) is
+    kept only when the audit mode capped ``key``'s input: the caller then
+    re-derives its probe side from it.  Otherwise ``frame`` is None and
+    the memo pins just the broadcast handle."""
     import os
 
     memo = getattr(spark, _SCORER_MEMO_ATTR, None)
@@ -293,7 +298,8 @@ def _corpus_broadcast(spark, key: str, sf_dir: str, build):
     cache_key = (key, sf_dir, os.environ.get(TWIN_AUDIT_ENV))
     if memo is not None and cache_key in memo:
         return memo[cache_key]
-    val = build()
+    bc, frame = build()
+    val = (bc, frame if key in TWIN_CAPS_APPLIED else None)
     if memo is not None:
         memo[cache_key] = val
     return val
@@ -714,7 +720,7 @@ def knn_classify(spark, sf_dir):
     # round-robin spread (r16, guide §2.5): the embeddings scan is ONE
     # parquet file at every bench SF — without it the whole quadratic
     # scoring stage runs as a single task.
-    if "knn_classify" in TWIN_CAPS_APPLIED:
+    if bpdf is not None:
         # audit mode capped the input with limit(): that plan's row
         # selection is not guaranteed stable across jobs on multi-file
         # input, so derive the probe side from the SAME materialization

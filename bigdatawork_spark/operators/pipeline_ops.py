@@ -15,7 +15,6 @@ from ..io import load
 from ..registry import register
 from .llm_ops import (
     SCORER_BCAST_MAX_BYTES,
-    TWIN_CAPS_APPLIED,
     _corpus_broadcast,
     _normed_vectors,
     guard_twin_size,
@@ -333,7 +332,7 @@ def dedup_embedding_cosine(spark, sf_dir):
         return spark.sparkContext.broadcast((ids, Bm, bnrm)), bpdf
 
     bc, bpdf = _corpus_broadcast(spark, "dedup_embedding_cosine", sf_dir, _build)
-    if "dedup_embedding_cosine" in TWIN_CAPS_APPLIED:
+    if bpdf is not None:
         # audit mode capped the input with limit(): derive the probe side
         # from the same materialization as the broadcast (ADVICE r16)
         probe_src = spark.createDataFrame(bpdf, schema=sel.schema)

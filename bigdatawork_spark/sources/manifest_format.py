@@ -583,7 +583,6 @@ def scan_schema_evolution(spark, sf_dir):
 
 @register(
     "table_format_stream_read",
-    streaming=True,
     oracle="""
 SELECT event_type,
        CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -655,7 +654,6 @@ def table_format_stream_read(spark, sf_dir):
 
 @register(
     "table_format_stream_sink",
-    streaming=True,
     oracle="""
 SELECT event_type,
        CAST(COUNT(*) AS BIGINT) AS n_rows,

@@ -29,6 +29,9 @@ from ..registry import register
 from .io_ops import _tmp
 from .manifest_format import ManifestTable, _events_cols
 
+_EVENT_SCHEMA = "event_id bigint, event_type string, value double"
+
+
 @register(
     "source_python_datasource",
     oracle="""
@@ -126,7 +129,6 @@ def source_python_datasource(spark, sf_dir):
 
 @register(
     "source_python_stream",
-    streaming=True,
     oracle="""
 SELECT event_type,
        CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -141,9 +143,9 @@ def source_python_stream(spark, sf_dir):
     ``partitions(start, end)`` plans one InputPartition per file ADDED in
     (start, end] (the manifest diff), and ``read`` runs in executors via
     pyarrow — so a new commit streams as exactly its delta, distributed.
-    Two commits (even/odd events) drain through the stream into a memory
-    sink; the accumulated result must equal the full table,
-    oracle-checked.  This is the same contract Delta's streaming source
+    Two commits (even/odd events) drain through the stream into parquet
+    (``drain_manifest_stream``); the accumulated result must equal the
+    full table, oracle-checked.  This is the same contract Delta's streaming source
     implements natively; version-as-offset makes replay idempotent
     (checkpointed offsets re-plan the same file lists)."""
     path = _tmp("pyds_stream")
@@ -152,7 +154,24 @@ def source_python_stream(spark, sf_dir):
     ev = _events_cols(spark, sf_dir)
     t.append(ev.filter(F.col("event_id") % 2 == 0))
     t.append(ev.filter(F.col("event_id") % 2 == 1))
+    return (
+        drain_manifest_stream(spark, path)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("value").cast("decimal(18,4)"))
+            .cast("double")
+            .alias("sum_value"),
+        )
+        .orderBy("event_type")
+    )
 
+
+def drain_manifest_stream(spark, path):
+    """Stream every commit of the manifest log at ``path`` through the
+    ``bdw_manifest_stream`` source into parquet and read the rows back.
+    When no micro-batch wrote a file (zero batches fired) the result is an
+    empty frame with the source schema."""
     from pyspark.sql.datasource import DataSourceStreamReader
 
     # closures, not module-level: the source instantiates in a separate
@@ -219,7 +238,7 @@ def source_python_stream(spark, sf_dir):
             return "bdw_manifest_stream"
 
         def schema(self) -> str:
-            return "event_id bigint, event_type string, value double"
+            return _EVENT_SCHEMA
 
         def streamReader(self, schema) -> "ManifestStreamReader":
             return ManifestStreamReader(self.options)
@@ -256,14 +275,6 @@ def source_python_stream(spark, sf_dir):
         q.processAllAvailable()
     finally:
         q.stop()
-    return (
-        spark.read.parquet(out)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    # the explicit schema also covers zero micro-batches: `out` then holds
+    # no parquet file for the reader to infer a schema from
+    return spark.read.schema(_EVENT_SCHEMA).parquet(out)

@@ -868,7 +868,7 @@ def stream_curate_to_table(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@register("stream_restart_checkpoint", streaming=True)
+@register("stream_restart_checkpoint")
 def stream_restart_checkpoint(spark, sf_dir):
     """Exactly-once across a planned restart: a per-user purchase count
     stream runs against file batch 1, STOPS, the source gains batch 2,
@@ -933,7 +933,7 @@ def stream_restart_checkpoint(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@register("stream_index_admission", streaming=True)  # rows-only: wall-clock source lifecycle
+@register("stream_index_admission")  # rows-only: wall-clock source lifecycle
 def stream_index_admission(spark, sf_dir):
     """Continuous admission as a STREAM: arriving documents are probed
     against the static corpus hash index (stream-static left_anti join —
@@ -1124,7 +1124,7 @@ def _wm_admission_stream(spark, sf_dir, src):
     )
 
 
-@register("stream_index_admission_wm", streaming=True)  # rows-only: wall-clock source lifecycle
+@register("stream_index_admission_wm")  # rows-only: wall-clock source lifecycle
 def stream_index_admission_wm(spark, sf_dir):
     """Bounded-state streaming admission (VERDICT r11 item 5): the
     admission ledger of ``stream_index_admission`` with a RE-ARRIVAL

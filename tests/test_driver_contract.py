@@ -5,9 +5,9 @@ array/map/struct cells (``TypeError: unhashable type: 'numpy.ndarray'``,
 CORRECTNESS_r01 ``array_funcs``).  Guard 1 pins every ORACLES-keyed query to
 scalar-only output columns so that class of failure can never regress.
 
-The driver also truncates its per-round CORRECTNESS run at the first 50 keys
-of ``queries()`` insertion order, so that order IS the verification budget.
-Guard 2 pins the DRIVER_PRIORITY front-loading invariants.
+``queries()`` / ``oracle_sql()`` are plain registration-order copies of the
+registry; a guard pins that they stay so, with no file reads or source
+introspection behind them.
 """
 
 from __future__ import annotations
@@ -15,14 +15,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql.types import ArrayType, MapType, StructType
 
-from bigdatawork_spark.registry import (
-    CONTRACT_KEYS,
-    DRIVER_PRIORITY,
-    ORACLES,
-    QUERIES,
-    driver_order,
-    driver_verified_keys,
-)
+from bigdatawork_spark.registry import ORACLES, QUERIES
 
 # SURVEY.md §2 contract keys (the judge's line-by-line checklist).
 SURVEY2_KEYS = frozenset(
@@ -65,17 +58,6 @@ SURVEY2_KEYS = frozenset(
     "multimodal_join".split()
 )
 
-# Keys already driver-green in CORRECTNESS_r01 (HASH or rows-only pass) —
-# everything else in SURVEY2_KEYS must sit in the driver-priority front.
-R01_GREEN = frozenset(
-    "str_funcs wordcount str_regexp date_funcs ts_funcs math_funcs cond_funcs "
-    "map_json_funcs hash_funcs scan_parquet scan_csv scan_jsonl source_inline "
-    "sink_parquet source_stream_file source_stream_rate sink_stream_memory "
-    "sink_stream_foreachbatch stream_tumbling stream_watermark_late "
-    "stream_dedup stream_stateful_count stream_static_join agg_global "
-    "agg_groupby_q1 agg_count_distinct".split()
-)
-
 
 @pytest.mark.parametrize("key", sorted(QUERIES))
 def test_oracled_output_is_scalar_only(key, spark, sf_dir):
@@ -97,135 +79,6 @@ def test_survey2_keys_all_registered():
     assert not missing, f"SURVEY §2 keys absent from registry: {sorted(missing)}"
 
 
-def test_driver_priority_well_formed():
-    assert len(DRIVER_PRIORITY) == len(set(DRIVER_PRIORITY)), "duplicate keys"
-    unknown = [k for k in DRIVER_PRIORITY if k not in QUERIES]
-    assert not unknown, f"priority keys not in registry: {unknown}"
-
-
-def test_driver_priority_front_loads_unverified_contract_keys():
-    # Every §2 key without a driver-green r01 row must be in the priority
-    # front so the driver's 50-key-per-round budget reaches it first.
-    unverified = SURVEY2_KEYS - R01_GREEN
-    front = set(DRIVER_PRIORITY)
-    missing = unverified - front
-    assert not missing, f"unverified contract keys not front-loaded: {sorted(missing)}"
-
-
-def test_registry_contract_keys_match_survey2():
-    # independent copies: a typo in either fails here
-    assert CONTRACT_KEYS == SURVEY2_KEYS
-
-
-def _mirror_tier(k, verified, recorded, vintage, upcoming):
-    """Independent copy of driver_order's tiering — a drift in either side
-    fails the tests below."""
-    from bigdatawork_spark.registry import (
-        ROTATION_DUE,
-        STREAMING_CADENCE,
-        is_streaming_key,
-        source_hash,
-    )
-
-    if k not in verified:
-        return 0 if k in CONTRACT_KEYS else 1
-    if recorded.get(k) != source_hash(k):
-        return 2
-    rnd = vintage.get(k, 0)
-    if k in ROTATION_DUE and upcoming >= ROTATION_DUE[k] > rnd:
-        return 3
-    if is_streaming_key(k) and rnd <= upcoming - STREAMING_CADENCE:
-        return 3
-    return 4
-
-
-def test_driver_order_front_loads_unverified_then_extras_then_verified():
-    ordered = list(driver_order(QUERIES))
-    assert set(ordered) == set(QUERIES)
-    verified = driver_verified_keys()
-    from bigdatawork_spark.registry import _verified_hashes, driver_latest_round, source_hash
-
-    recorded = _verified_hashes()
-    vintage = driver_latest_round()
-    upcoming = max(vintage.values(), default=0) + 1
-
-    tiers = [_mirror_tier(k, verified, recorded, vintage, upcoming) for k in ordered]
-    assert tiers == sorted(tiers), (
-        "driver_order must be tiered: unverified contract, unverified "
-        "extras, verified-but-stale, rotation-due, verified"
-    )
-
-
-def test_streaming_cadence_floats_stale_streaming_keys():
-    """VERDICT r11 item 4: a streaming key whose newest clean driver row is
-    >= STREAMING_CADENCE rounds older than the upcoming round must rank in
-    the due tier — ahead of every fresh verified non-due key — so the
-    every-other-round streaming re-sample can't be crowded out of the
-    driver's ~50-key window again."""
-    from bigdatawork_spark.registry import (
-        ROTATION_DUE,
-        STREAMING_CADENCE,
-        _verified_hashes,
-        driver_latest_round,
-        is_streaming_key,
-        source_hash,
-    )
-
-    vintage = driver_latest_round()
-    if not vintage:
-        pytest.skip("no CORRECTNESS_r*.json present")
-    verified = driver_verified_keys()
-    recorded = _verified_hashes()
-    upcoming = max(vintage.values()) + 1
-    overdue = [
-        k
-        for k in QUERIES
-        if k in verified
-        and recorded.get(k) == source_hash(k)
-        and is_streaming_key(k)
-        and vintage.get(k, 0) <= upcoming - STREAMING_CADENCE
-    ]
-    fresh = [
-        k
-        for k in QUERIES
-        if k in verified
-        and recorded.get(k) == source_hash(k)
-        and not is_streaming_key(k)
-        and k not in ROTATION_DUE
-        and vintage.get(k, 0) == upcoming - 1
-    ]
-    if not overdue or not fresh:
-        pytest.skip("no overdue streaming key or no fresh key to compare")
-    ordered = list(driver_order(QUERIES))
-    pos = {k: i for i, k in enumerate(ordered)}
-    worst_overdue = max(pos[k] for k in overdue)
-    best_fresh = min(pos[k] for k in fresh)
-    assert worst_overdue < best_fresh, (
-        "overdue streaming keys must outrank fresh verified keys"
-    )
-
-
-def test_streaming_predicate_covers_every_readstream_builder():
-    """code-review r12: a name-prefix-only streaming predicate silently
-    excluded three Structured Streaming keys from the cadence rule.  Sweep
-    every builder's SOURCE for readStream/writeStream usage — any builder
-    that drives a stream must be flagged by is_streaming_key, whatever its
-    name or module."""
-    import inspect
-
-    from bigdatawork_spark.registry import is_streaming_key
-
-    missed = []
-    for k, fn in QUERIES.items():
-        try:
-            src = inspect.getsource(fn)
-        except (OSError, TypeError):
-            continue
-        if ("readStream" in src or "writeStream" in src) and not is_streaming_key(k):
-            missed.append(k)
-    assert not missed, f"streaming builders outside the cadence: {missed}"
-
-
 def test_codegen_class_cache_sized_for_the_batch(spark):
     """The generated-class cache must stay sized above the headline batch's
     codegen-stage count (r12: the default 100 entries thrashed — every
@@ -233,263 +86,6 @@ def test_codegen_class_cache_sized_for_the_batch(spark):
     'switch penalty' for two rounds).  Static conf, so this pins the
     builder in session.get_spark, which created this session."""
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 5000
-
-
-def test_driver_window_covers_priority_tiers_when_they_fit():
-    """Permanent rotation invariant (the r11 window-arithmetic lesson):
-    whenever the union of never-verified, source-stale, rotation-due, and
-    cadence-overdue-streaming keys fits in the driver's ~50-key window,
-    the first 50 of driver_order must contain ALL of them — no priority
-    key may be crowded out by fresh verified keys."""
-    from bigdatawork_spark.registry import (
-        ROTATION_DUE,
-        STREAMING_CADENCE,
-        _verified_hashes,
-        driver_latest_round,
-        is_streaming_key,
-        source_hash,
-    )
-
-    vintage = driver_latest_round()
-    if not vintage:
-        pytest.skip("no CORRECTNESS_r*.json present")
-    verified = driver_verified_keys()
-    recorded = _verified_hashes()
-    upcoming = max(vintage.values()) + 1
-    need = set()
-    for k in QUERIES:
-        if k not in verified:
-            need.add(k)
-        elif recorded.get(k) != source_hash(k):
-            need.add(k)
-        elif k in ROTATION_DUE and upcoming >= ROTATION_DUE[k] > vintage.get(k, 0):
-            need.add(k)
-        elif is_streaming_key(k) and vintage.get(k, 0) <= upcoming - STREAMING_CADENCE:
-            need.add(k)
-    if len(need) > 50:
-        pytest.skip(f"priority tiers exceed the window ({len(need)} keys)")
-    window = set(list(driver_order(QUERIES))[:50])
-    missing = sorted(need - window)
-    assert not missing, f"priority keys crowded out of the 50-key window: {missing}"
-
-
-def test_rotation_due_well_formed_and_self_disabling():
-    from bigdatawork_spark.registry import ROTATION_DUE, driver_latest_round
-
-    unknown = [k for k in ROTATION_DUE if k not in QUERIES]
-    assert not unknown, f"ROTATION_DUE keys not in registry: {unknown}"
-    # Self-disabling: once a key's vintage reaches its due round the boost
-    # is inert — simulate by checking the predicate, not the artifact.
-    vintage = driver_latest_round()
-    for k, due_round in ROTATION_DUE.items():
-        if vintage.get(k, 0) >= due_round:
-            continue  # consumed entries are fine
-        assert due_round >= 12
-
-
-def test_driver_order_floats_stale_keys_ahead_of_fresh(tmp_path):
-    """VERDICT r06 item 5: a verified key whose builder source changed
-    since its recorded verification hash must outrank verified-unchanged
-    keys (a green row certifies only the source that produced it)."""
-    import json
-
-    from bigdatawork_spark.registry import _verified_hashes, source_hash
-
-    verified = sorted(driver_verified_keys() & set(QUERIES))
-    if len(verified) < 2:
-        pytest.skip("need at least two verified keys")
-    stale_key, fresh_key = verified[0], verified[1]
-    snap = {k: source_hash(k) for k in verified}
-    snap[stale_key] = "0" * 64  # pretend its source changed since the row
-    hf = tmp_path / "hashes.json"
-    hf.write_text(json.dumps(snap))
-    ordered = list(driver_order(QUERIES, _hash_file=str(hf)))
-    assert ordered.index(stale_key) < ordered.index(fresh_key)
-    # the stale key still ranks BEHIND every never-verified key
-    for k in QUERIES:
-        if k not in verified:
-            assert ordered.index(k) < ordered.index(stale_key)
-    # hygiene: the real snapshot parses and covers only registered keys
-    real = _verified_hashes()
-    assert set(real) <= set(QUERIES)
-
-
-def _load_probe_module(path, source):
-    """Load ``source`` from ``path`` as a package-namespaced module (the
-    closure walk only recurses into ``bigdatawork_spark.*`` callables)."""
-    import importlib.util
-    import sys
-
-    path.write_text(source)
-    name = "bigdatawork_spark._closure_probe"
-    spec = importlib.util.spec_from_file_location(name, path)
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules[name] = mod  # _const_srcs resolves via sys.modules
-    spec.loader.exec_module(mod)
-    return mod
-
-
-_PROBE_V1 = '''\
-_CAP = 4
-
-def helper(x):
-    return x + 1
-
-def caller_a(v):
-    return helper(v) * _CAP
-
-def caller_b(v):
-    return helper(v) - 1
-'''
-
-
-def test_helper_edit_marks_every_caller_stale(tmp_path):
-    """VERDICT r12 item 3: ``source_hash`` must cover the transitive
-    closure — an edit to a SHARED HELPER (or a referenced module constant)
-    changes the fingerprint of every caller, even though the callers' own
-    text is byte-identical.  Combined with
-    ``test_driver_order_floats_stale_keys_ahead_of_fresh`` (hash mismatch
-    ⇒ tier 2) this pins the full chain: helper edit ⇒ every caller ranks
-    tier-2 stale in driver_order."""
-    import sys
-
-    from bigdatawork_spark import registry
-
-    key_a, key_b = "__closure_probe_a", "__closure_probe_b"
-    try:
-        mod = _load_probe_module(tmp_path / "probe_v1.py", _PROBE_V1)
-        registry.QUERIES[key_a] = mod.caller_a
-        registry.QUERIES[key_b] = mod.caller_b
-        h1 = {k: registry.source_hash(k) for k in (key_a, key_b)}
-        # the closure actually contains the helper and the constant
-        cs = registry.closure_sources(mod.caller_a)
-        assert any(t.endswith(".helper") for t in cs), sorted(cs)
-        assert any(t.endswith("._CAP") for t in cs), sorted(cs)
-
-        # v2: ONLY the shared helper's body changes (new filename so
-        # linecache can't serve stale lines; same module name)
-        mod2 = _load_probe_module(
-            tmp_path / "probe_v2.py",
-            _PROBE_V1.replace("return x + 1", "return x + 2"),
-        )
-        registry.QUERIES[key_a] = mod2.caller_a
-        registry.QUERIES[key_b] = mod2.caller_b
-        for k in (key_a, key_b):
-            registry._SOURCE_HASH_CACHE.pop(k, None)
-        h2 = {k: registry.source_hash(k) for k in (key_a, key_b)}
-        assert h1[key_a] != h2[key_a], "caller_a blind to helper edit"
-        assert h1[key_b] != h2[key_b], "caller_b blind to helper edit"
-
-        # v3: only the CONSTANT changes — callers referencing it go stale
-        mod3 = _load_probe_module(
-            tmp_path / "probe_v3.py", _PROBE_V1.replace("_CAP = 4", "_CAP = 5")
-        )
-        registry.QUERIES[key_a] = mod3.caller_a
-        registry._SOURCE_HASH_CACHE.pop(key_a, None)
-        registry._CONST_SRC_CACHE.pop("bigdatawork_spark._closure_probe", None)
-        assert registry.source_hash(key_a) != h2[key_a], (
-            "caller_a blind to constant edit"
-        )
-    finally:
-        for k in (key_a, key_b):
-            registry.QUERIES.pop(k, None)
-            registry._SOURCE_HASH_CACHE.pop(k, None)
-        registry._CONST_SRC_CACHE.pop("bigdatawork_spark._closure_probe", None)
-        sys.modules.pop("bigdatawork_spark._closure_probe", None)
-
-
-def test_closure_covers_in_function_imports():
-    """r13 review: helpers bound by an in-function ``from … import``
-    never reach ``__globals__``, so the global-namespace walk alone
-    missed them — the AST pass must pull them into the closure.  Pinned
-    on the real blind-spot cases the review named."""
-    from bigdatawork_spark import registry
-
-    cs = registry.closure_sources(registry.QUERIES["stream_index_admission"])
-    for helper in ("stamp_mtimes", "_read_stream", "_fresh_dir"):
-        assert any(t.endswith(f".{helper}") for t in cs), (helper, sorted(cs)[:20])
-    # absolute-form in-package import inside a body (sql_api.sql)
-    cs = registry.closure_sources(registry.QUERIES["sql_interface"])
-    assert any(".sql_api." in t for t in cs), sorted(cs)[:20]
-
-
-def test_closure_constant_fingerprint_is_process_independent():
-    """Constants enter the closure by ASSIGNMENT TEXT, not runtime value:
-    ``io_ops._TMP_ROOT`` embeds ``os.getpid()``, which differed per process
-    and would have marked the scan/sink family permanently stale (found
-    while building the closure hash — a value-based fingerprint broke
-    cross-process determinism)."""
-    from bigdatawork_spark.registry import _const_srcs, closure_sources
-    from bigdatawork_spark.registry import QUERIES
-
-    srcs = _const_srcs("bigdatawork_spark.sources.io_ops")
-    assert "_TMP_ROOT" in srcs and "getpid" in srcs["_TMP_ROOT"]
-    cs = closure_sources(QUERIES["scan_csv"])
-    tag = "const:bigdatawork_spark.sources.io_ops._TMP_ROOT"
-    assert cs.get(tag) == srcs["_TMP_ROOT"]
-
-
-def test_driver_order_rotates_on_round1_results():
-    # With CORRECTNESS_r01.json committed, its green keys (e.g. str_funcs,
-    # agg_groupby_q1) must sit BEHIND every not-yet-verified key.
-    verified = driver_verified_keys()
-    if not verified:
-        pytest.skip("no CORRECTNESS_r*.json present")
-    ordered = list(driver_order(QUERIES))
-    n_unverified = len([k for k in ordered if k not in verified])
-    assert all(k in verified for k in ordered[n_unverified:])
-    assert "str_funcs" in verified and "agg_groupby_q1" in verified
-
-
-def test_driver_order_rotates_oldest_vintage_first():
-    """VERDICT r10 item 1: within the verified tiers, keys must sort by the
-    round of their newest clean driver row ascending, so the driver's
-    ~50-key window resamples the stalest vintages (r01/r03 §2-B/J/H/A keys)
-    instead of a fixed priority order."""
-    from bigdatawork_spark.registry import (
-        _verified_hashes,
-        driver_latest_round,
-        source_hash,
-    )
-
-    from bigdatawork_spark.registry import is_streaming_key
-
-    vintage = driver_latest_round()
-    if not vintage:
-        pytest.skip("no CORRECTNESS_r*.json present")
-    verified = driver_verified_keys()
-    recorded = _verified_hashes()
-    upcoming = max(vintage.values()) + 1
-    ordered = list(driver_order(QUERIES))
-    # per-tier vintage monotonicity (tiers 2, 3, 4 separately).  Tier 3
-    # additionally sub-ranks due STREAMING keys ahead of due batch keys
-    # (VERDICT r15 item 1: the cadence rule was displaced two rounds
-    # running by the vintage burn-down), so its monotonicity is asserted
-    # per sub-group and the streaming block must precede the batch block.
-    for want_tier in (2, 4):
-        rounds = [
-            vintage.get(k, 0)
-            for k in ordered
-            if _mirror_tier(k, verified, recorded, vintage, upcoming) == want_tier
-        ]
-        assert rounds == sorted(rounds), (
-            f"verified tier {want_tier} not vintage-ascending"
-        )
-    due = [
-        k
-        for k in ordered
-        if _mirror_tier(k, verified, recorded, vintage, upcoming) == 3
-    ]
-    flags = [is_streaming_key(k) for k in due]
-    assert flags == sorted(flags, reverse=True), (
-        "due tier: streaming keys must precede batch keys"
-    )
-    for grp_flag in (True, False):
-        rounds = [vintage.get(k, 0) for k in due if is_streaming_key(k) is grp_flag]
-        assert rounds == sorted(rounds), (
-            f"due tier ({'streaming' if grp_flag else 'batch'} sub-group) "
-            "not vintage-ascending"
-        )
 
 
 def test_entry_queries_tune_a_foreign_session(spark):
@@ -526,119 +122,6 @@ def test_every_key_has_semantics_docstring(key):
     assert len(doc.strip()) >= 40, f"{key} lacks a meaningful docstring"
 
 
-def test_closure_sources_walks_plain_imports_and_unimported_modules(monkeypatch):
-    """ADVICE r13: the AST pass must see in-function `import pkg.mod`
-    statements (bound name is a module — the identifier scan never
-    traverses it) and must import_module (guarded) targets absent from
-    sys.modules instead of silently skipping them."""
-    import sys
-
-    from bigdatawork_spark.registry import closure_sources
-
-    def uses_plain_import(spark, sf_dir):
-        import bigdatawork_spark.session
-        return bigdatawork_spark.session
-
-    parts = closure_sources(uses_plain_import)
-    assert "module:bigdatawork_spark.session" in parts
-
-    # monkeypatch.delitem restores the ORIGINAL module object afterwards
-    # (r14 review: a bare pop left closure_sources' re-import as a
-    # duplicate module, breaking identity for later tests order-dependently)
-    monkeypatch.delitem(
-        sys.modules, "bigdatawork_spark.plans.explain", raising=False
-    )
-
-    def uses_unimported(spark, sf_dir):
-        from bigdatawork_spark.plans.explain import formatted_plan
-        return formatted_plan
-
-    parts = closure_sources(uses_unimported)
-    assert any("formatted_plan" in t for t in parts), sorted(parts)
-
-
-def test_closure_sources_respects_package_boundary():
-    """ADVICE r14: `import bigdatawork_spark_extras` (a foreign top-level
-    module that merely SHARES the package-name prefix) must not be folded
-    into the fingerprint — a bare startswith(pkg) match would hash its
-    whole source (or an <unresolvable> marker), churning staleness on
-    third-party edits."""
-    from bigdatawork_spark.registry import closure_sources
-
-    def uses_foreign(spark, sf_dir):
-        import bigdatawork_spark_extras  # noqa: F401 — never executed
-        return None
-
-    parts = closure_sources(uses_foreign)
-    assert not any("bigdatawork_spark_extras" in t for t in parts), sorted(
-        parts
-    )
-
-    # the boundary fix must not break the legitimate exact-package and
-    # dotted-submodule cases
-    def uses_pkg_and_sub(spark, sf_dir):
-        import bigdatawork_spark.session
-        return bigdatawork_spark.session
-
-    parts = closure_sources(uses_pkg_and_sub)
-    assert "module:bigdatawork_spark.session" in parts
-
-
-def test_closure_sources_boundary_from_import_and_module_attr(monkeypatch):
-    """ADVICE r15: the r14 boundary fix covered only the ast.Import
-    branch.  A foreign prefix-sharing module reached via `from`-import or
-    via a referenced object's __module__ must be excluded too — otherwise
-    a `bigdatawork_spark_extras` helper would fold into the closure
-    fingerprint (spurious staleness on third-party edits)."""
-    import sys
-    import types
-
-    from bigdatawork_spark.registry import closure_sources
-
-    # install a REAL (fake) foreign module so resolution succeeds and the
-    # old bare-prefix match would have traversed its contents
-    foreign = types.ModuleType("bigdatawork_spark_extras")
-    exec("def foreign_helper():\n    return 41\n", foreign.__dict__)
-    foreign.foreign_helper.__module__ = "bigdatawork_spark_extras"
-    monkeypatch.setitem(sys.modules, "bigdatawork_spark_extras", foreign)
-
-    # from-import form (registry.py ImportFrom branch)
-    def uses_foreign_from(spark, sf_dir):
-        from bigdatawork_spark_extras import foreign_helper
-        return foreign_helper
-
-    parts = closure_sources(uses_foreign_from)
-    assert not any("bigdatawork_spark_extras" in t for t in parts), sorted(
-        parts
-    )
-
-    # __module__ form (the identifier-scan omod check): a global binding
-    # whose object CLAIMS a foreign prefix-sharing module.  The function is
-    # defined normally in THIS file (so inspect.getsource works and the
-    # identifier scan runs over real source) and the foreign helper is
-    # injected into this module's globals, which ARE the function's
-    # __globals__.
-    monkeypatch.setitem(
-        globals(), "foreign_helper", foreign.foreign_helper
-    )
-
-    def uses_foreign_global(spark, sf_dir):
-        return foreign_helper  # noqa: F821 — injected above
-
-    parts = closure_sources(uses_foreign_global)
-    assert not any("bigdatawork_spark_extras" in t for t in parts), sorted(
-        parts
-    )
-
-    # sanity: a legitimate package-local from-import still traverses
-    def uses_local_from(spark, sf_dir):
-        from bigdatawork_spark.plans.explain import formatted_plan
-        return formatted_plan
-
-    parts = closure_sources(uses_local_from)
-    assert any("formatted_plan" in t for t in parts), sorted(parts)
-
-
 def test_oracle_fixed_sf_declaration_is_accurate():
     """ORACLE_FIXED_SF (r16) declares the keys whose oracle SQL names the
     contract's sf0.01 path literally (DuckDB parquet_metadata() rejects
@@ -660,3 +143,34 @@ def test_oracle_fixed_sf_declaration_is_accurate():
                 f"{key} hard-codes a testdata path but is not declared"
                 " in ORACLE_FIXED_SF"
             )
+
+
+def test_entry_maps_are_registration_order_without_io(monkeypatch):
+    """``queries()`` / ``oracle_sql()`` are plain copies of the registry in
+    registration order.  Deterministic guard against a set-up scan creeping
+    back in: a source-closure hash over every builder once cost ~6 s per
+    process start, so both calls must still work with source
+    introspection, globbing and file opens all failing."""
+    import builtins
+    import glob
+    import inspect
+
+    import __spark_entry__ as entry_mod
+
+    def boom(*args, **kwargs):
+        raise AssertionError("queries()/oracle_sql() must not touch files or source")
+
+    def check():
+        q = entry_mod.queries()
+        o = entry_mod.oracle_sql()
+        assert list(q) == list(QUERIES)
+        assert all(q[k].__doc__ == QUERIES[k].__doc__ for k in q)
+        assert list(o.items()) == list(ORACLES.items())
+        assert o is not ORACLES  # a copy: callers may not mutate the registry
+        assert (len(q), len(o)) == (289, 266)
+
+    check()
+    monkeypatch.setattr(inspect, "getsource", boom)
+    monkeypatch.setattr(glob, "glob", boom)
+    monkeypatch.setattr(builtins, "open", boom)
+    check()

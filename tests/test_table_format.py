@@ -408,3 +408,25 @@ def test_dot_dir_and_traversal_names_rejected(spark, sf_dir):
     assert t.versions() == [1]
     assert t.read().count() == 10
     assert t.append(ev.limit(3), name="batch.b-ok_2") == 2
+
+
+def test_python_stream_drain_of_empty_manifest(spark, monkeypatch):
+    """The ``source_python_stream`` drain over a manifest log with no
+    commits reads back an empty frame with the source schema.  Such a log
+    still fires one empty micro-batch, which writes a schema-only parquet
+    file; a drain in which no batch wrote (zero micro-batches) leaves no
+    file at all, and the read-back must not then fail schema inference on
+    the empty output directory."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from bigdatawork_spark.sources.python_datasource import drain_manifest_stream
+
+    t, path = _fresh(spark, "pyds_stream_empty")
+    assert t.versions() == []
+    schema = "struct<event_id:bigint,event_type:string,value:double>"
+    out = drain_manifest_stream(spark, path)
+    assert out.count() == 0 and out.schema.simpleString() == schema
+    # no batch writes a file: the state zero micro-batches leave behind
+    monkeypatch.setattr(DataFrameWriter, "parquet", lambda self, *a, **k: None)
+    out = drain_manifest_stream(spark, path)
+    assert out.count() == 0 and out.schema.simpleString() == schema

@@ -196,3 +196,29 @@ def test_audit_cap_env_accepts_padded_int_and_bare_flag(spark, monkeypatch):
     monkeypatch.setenv(llm_ops.TWIN_AUDIT_ENV, "1")
     out = guard_twin_size(df, "k_flag", "prod", limit=10)
     assert out.count() == 10 and llm_ops.TWIN_CAPS_APPLIED["k_flag"] == (100, 10)
+
+
+@pytest.mark.parametrize("key", ["knn_classify", "dedup_embedding_cosine"])
+def test_scorer_memo_pins_frame_only_on_audit_capped_path(
+    key, spark, sf_dir, monkeypatch
+):
+    """The scorer twins memoize their collected corpus per session.  The
+    pandas copy (~26 MB at the twin cap) is needed only when the audit
+    mode capped the input, to re-derive the probe side from the same rows;
+    an uncapped session's memo must hold just the broadcast handle."""
+
+    def memo_entry(audit):
+        return getattr(spark, llm_ops._SCORER_MEMO_ATTR)[(key, sf_dir, audit)]
+
+    llm_ops.TWIN_CAPS_APPLIED.clear()
+    monkeypatch.delenv(llm_ops.TWIN_AUDIT_ENV, raising=False)
+    QUERIES[key](spark, sf_dir).count()
+    assert memo_entry(None)[1] is None
+    monkeypatch.setenv(llm_ops.TWIN_AUDIT_ENV, "40")
+    try:
+        QUERIES[key](spark, sf_dir).count()
+        assert llm_ops.TWIN_CAPS_APPLIED[key][1] == 40
+        frame = memo_entry("40")[1]
+        assert frame is not None and len(frame) == 40
+    finally:
+        llm_ops.TWIN_CAPS_APPLIED.clear()

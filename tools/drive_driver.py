@@ -1,15 +1,23 @@
 """Simulate the grading driver: entry() smoke + queries() vs oracle_sql()
 through DuckDB at sf0.01 with an order-insensitive value-hash.
 
-Usage: python tools/drive_driver.py [N]        # first N keys of queries() order
+Usage: python tools/drive_driver.py            # full sweep: every registered key
+       python tools/drive_driver.py N          # first N keys in registration order
        python tools/drive_driver.py key [key…] # only the named keys
-(vendored from the /verify skill recipe; the driver runs ~50 keys/round)
+
+Exits nonzero when any key errors or its hash differs from the oracle's.
 """
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the Python workers import the engine too, whatever the working directory
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb
 import __spark_entry__ as E
