@@ -931,13 +931,14 @@ p AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bg),
 c AS (SELECT w1, w2, COUNT(*) AS cnt FROM p GROUP BY 1, 2),
 ctx AS (SELECT w1, SUM(cnt) AS n_ctx FROM c GROUP BY w1),
 model AS (
-  SELECT c.w1, c.w2, ln((cnt + 0.5) / (n_ctx + 0.5 * vocab)) AS lp
+  SELECT c.w1, c.w2,
+         CAST(ln((cnt + 0.5) / (n_ctx + 0.5 * vocab)) AS DECIMAL(28,12)) AS lp
   FROM c JOIN ctx USING (w1) CROSS JOIN v
 )
 SELECT p.doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-       ROUND(-AVG(lp), 6) AS avg_nll,
-       ROUND(exp(ROUND(-AVG(lp), 6)), 4) AS ppl
+       ROUND(-CAST(SUM(lp) AS DOUBLE) / COUNT(*), 6) AS avg_nll,
+       ROUND(exp(ROUND(-CAST(SUM(lp) AS DOUBLE) / COUNT(*), 6)), 4) AS ppl
 FROM p JOIN model USING (w1, w2)
 GROUP BY p.doc_id
 ORDER BY p.doc_id
@@ -977,10 +978,9 @@ def bigram_nll_scores(d, id_col: str = "doc_id", col: str = "text"):
     # every bench SF, and `pairs` is consumed twice (model counts + the
     # scoring join) — unspread, BOTH bigram explodes ran as single
     # tasks.  Round-robin the compact word-array rows first: 6.4-7.6 s →
-    # 3.4-5.0 s at sf1.0.  The new partitioning changes the double-avg
-    # fold order; output verified pandas-equal at sf1.0 and oracle HASH
-    # re-verified at sf0.001/0.01/0.1 (the avg_nll round-6 values sit
-    # clear of rounding boundaries on every checked corpus).
+    # 3.4-5.0 s at sf1.0.  Fold-order-safe: per-bigram log-probs are cast
+    # to DECIMAL(28,12) before the per-doc sum (the dsir_importance_resample
+    # discipline), so avg_nll does not depend on partition count or order.
     words = words.repartition(d.sparkSession.sparkContext.defaultParallelism)
     pairs = (
         words.where("size(ws) >= 2")
@@ -1000,14 +1000,19 @@ def bigram_nll_scores(d, id_col: str = "doc_id", col: str = "text"):
     model = (
         c.join(ctx, "w1")
         .crossJoin(F.broadcast(vocab))
-        .selectExpr("w1", "w2", "ln((cnt + 0.5) / (n_ctx + 0.5 * vocab)) as lp")
+        .selectExpr(
+            "w1", "w2",
+            "cast(ln((cnt + 0.5) / (n_ctx + 0.5 * vocab)) as decimal(28,12)) as lp",
+        )
     )
     return (
         pairs.join(model, ["w1", "w2"])
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
-            F.round(-F.avg("lp"), 6).alias("avg_nll"),
+            F.round(
+                -F.sum("lp").cast("double") / F.count(F.lit(1)), 6
+            ).alias("avg_nll"),
         )
         .selectExpr(
             f"{id_col}", "n_bigrams", "avg_nll", "round(exp(avg_nll), 4) as ppl"
