@@ -467,10 +467,10 @@ def _fill_cache(spark, sf_dir) -> None:
 
 def _drop_cache(spark, sf_dir) -> None:
     """Unpersist ``sf_dir``'s cached tables so a later phase at another SF
-    is not squeezed (delegates to io.drop_tables — the store owner)."""
-    from bigdatawork_spark.io import drop_tables
+    is not squeezed (delegates to the session cache, which owns them)."""
+    from bigdatawork_spark import cache
 
-    drop_tables(spark, sf_dir)
+    cache.drop(spark, sf_dir)
 
 
 def _recorded_sf10(path: str | None = None) -> dict | None:

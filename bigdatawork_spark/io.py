@@ -13,28 +13,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import cache
 from .schemas import SCHEMAS
 from .session import ensure_tuned
 
-# Both memo stores live ON the SparkSession object (attribute dicts keyed
-# by (sf_dir, name)), not in an id(spark)-keyed module dict: a recycled
-# CPython id after session GC would hand back DataFrame handles bound to a
-# dead JVM session (ADVICE r03).  Object-attached state dies with the
-# session, so aliasing is impossible.
+# Two session-cache namespaces (cache.py), keyed (ns, sf_dir, name, ...):
 #
-# _CACHE_ATTR: .cache()'d DataFrames, populated only when
+# "table": .cache()'d DataFrames, populated only when
 # SPARK_GRAFT_CACHE=1 (bench mode): one batch reads each hot table once
 # into the columnar in-memory store, mirroring the warm-cache protocol the
 # DuckDB BASELINE was measured under (BASELINE.md).
 #
-# _HANDLES_ATTR: plain DataFrame HANDLES (no .cache(), no data pinned).
+# "handle": plain DataFrame HANDLES (no .cache(), no data pinned).
 # DataFrames are immutable, so handing the same object back is
 # semantically identical to re-reading — it just skips the per-load py4j
 # round trips (session tuning, parquet footer listing, schema inspection,
 # normalization), which are ~10 JVM calls per table and dominated measured
 # DataFrame-construction time (BASELINE.md round 3: 70–190 ms per query).
-_CACHE_ATTR = "_bigdatawork_table_cache"
-_HANDLES_ATTR = "_bigdatawork_table_handles"
 
 # Physical layout policy for the cached (bench-mode) tables: cluster each
 # hot table by its dominant join/window key — the in-memory analog of
@@ -176,18 +171,6 @@ def _cluster_partitions(spark: SparkSession) -> int:
         return 32
 
 
-def _session_store(spark: SparkSession, attr: str) -> dict:
-    store = getattr(spark, attr, None)
-    if store is None:
-        store = {}
-        try:
-            setattr(spark, attr, store)
-        except Exception:
-            pass  # un-taggable session: degrade to re-reading per call
-    return store
-
-
-
 _TS_TYPES = (T.TimestampType, T.TimestampNTZType)
 
 # Epoch-unit bands, unambiguous for any date between 1973 and 2262:
@@ -292,21 +275,6 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _normalize(spark.read.parquet(f"{sf_dir}/{name}.parquet"), name)
 
 
-def drop_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Unpersist every cached table for ``sf_dir`` and forget the handles.
-    Lives here, next to the stores it evicts, so the store layout has ONE
-    owner (bench.py's sf1.0 phase calls this to avoid squeezing the
-    sf0.1 cache it times afterwards)."""
-    for attr in (_CACHE_ATTR, _HANDLES_ATTR):
-        store = getattr(spark, attr, None) or {}
-        for key in [k for k in store if k[0] == sf_dir]:
-            df = store.pop(key)
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-
-
 def load(
     spark: SparkSession,
     sf_dir: str,
@@ -340,11 +308,10 @@ def load(
     identically and match DuckDB's naive µs TIMESTAMP.
     """
     ensure_tuned(spark)
-    key = (sf_dir, name)
     dcols = _DERIVED_COLS.get(name, [])
     if os.environ.get("SPARK_GRAFT_CACHE") == "1":
-        cache = _session_store(spark, _CACHE_ATTR)
-        if key not in cache:
+
+        def fill():
             df = _read(spark, sf_dir, name)
             for cname, cexpr in dcols:
                 df = df.withColumn(cname, F.expr(cexpr))
@@ -354,12 +321,12 @@ def load(
                 df = df.repartition(nparts or _cluster_partitions(spark), ckey)
                 if sort_cols and all(c in df.columns for c in sort_cols):
                     df = df.sortWithinPartitions(*sort_cols)
-            cache[key] = df.cache()
-        out = cache[key]
+            return df.cache()
+
+        out = cache.memo(spark, ("table", sf_dir, name), fill)
         if projection is not None and (name, projection) in _PROJECTIONS:
-            pkey = (sf_dir, name, projection)
-            if pkey not in cache:
-                ckey, nparts = _PROJECTIONS[(name, projection)]
+
+            def fill_projection():
                 # repartition FROM the decoded primary cache (no second
                 # parquet decode); fill is paid once, untimed, like every
                 # cache fill.  Materialize EAGERLY: an InMemoryRelation
@@ -369,21 +336,22 @@ def load(
                 # and pins hashpartitioning(ckey, nparts) for every later
                 # consumer (the exchange elision is the projection's whole
                 # point).
-                pdf = (
-                    cache[key]
-                    .repartition(nparts or _cluster_partitions(spark), ckey)
-                    .cache()
-                )
+                ckey, nparts = _PROJECTIONS[(name, projection)]
+                pdf = out.repartition(
+                    nparts or _cluster_partitions(spark), ckey
+                ).cache()
                 pdf.count()
-                cache[pkey] = pdf
-            out = cache[pkey]
+                return pdf
+
+            out = cache.memo(
+                spark, ("table", sf_dir, name, projection), fill_projection
+            )
         if not derived and dcols:
             out = out.drop(*[c for c, _ in dcols])
         return out
-    handles = _session_store(spark, _HANDLES_ATTR)
-    if key not in handles:
-        handles[key] = _read(spark, sf_dir, name)
-    out = handles[key]
+    out = cache.memo(
+        spark, ("handle", sf_dir, name), lambda: _read(spark, sf_dir, name)
+    )
     if derived:
         for cname, cexpr in dcols:
             out = out.withColumn(cname, F.expr(cexpr))

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..io import load
 from ..registry import register
 
@@ -314,28 +315,18 @@ def char_ngram_profile(spark, sf_dir):
     )
 
 
-# Learned merge rules memoized per (sf_dir, n_merges) ON the session object
-# (io.py's pattern — dies with the session, id-reuse-safe).  The rules are a
-# plain list of tuples (no JVM handles), training is deterministic, and the
-# corpus is immutable per sf_dir, so re-training is pure waste: without the
-# memo, bpe_encode_apply re-trains from scratch right after bpe_train_merges
-# already did, and the schema-only driver-contract sweep paid two full
-# trainings just to inspect output schemas (ADVICE r04).
-_BPE_ATTR = "_bigdatawork_bpe_memo"
-
-
+# Learned merge rules memoized per (sf_dir, n_merges) in the session
+# cache.  The rules are a plain list of tuples (no JVM handles), training
+# is deterministic, and the corpus is immutable per sf_dir, so re-training
+# is pure waste: without the memo, bpe_encode_apply re-trains from scratch
+# right after bpe_train_merges already did, and the schema-only
+# driver-contract sweep paid two full trainings just to inspect output
+# schemas (ADVICE r04).
 def _bpe_train(spark, sf_dir, n_merges: int = 4):
-    memo = getattr(spark, _BPE_ATTR, None)
-    if memo is None:
-        memo = {}
-        try:
-            setattr(spark, _BPE_ATTR, memo)
-        except Exception:
-            pass  # un-taggable session: degrade to re-training per call
-    key = (sf_dir, n_merges)
-    if key not in memo:
-        memo[key] = _bpe_train_impl(spark, sf_dir, n_merges)
-    return memo[key]
+    return cache.memo(
+        spark, ("bpe", sf_dir, n_merges),
+        lambda: _bpe_train_impl(spark, sf_dir, n_merges),
+    )
 
 
 def _bpe_train_impl(spark, sf_dir, n_merges: int = 4):

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import cache as session_cache
 from ..io import load
 from ..registry import register
 
@@ -1628,38 +1629,32 @@ def _augmented_documents(spark, sf_dir):
     )
 
 
-# Bounded-lifetime cache for the hashed (augmented) relation: every
-# admission builder consumes batch/corpus from MULTIPLE subplans (group
-# mins + joins), and Spark recomputes the full union+sha2 lineage per
-# consumer otherwise (the SURVEY §7 cache-shared-subplans lesson).  One
-# sf_dir is live at a time; switching evicts the previous dir's entries
-# (tests fuzz over fresh tmp dirs — without eviction each example would
-# leak a cached relation into executor storage, ADVICE r10).
-_SPLIT_CACHE: dict[str, dict[bool, object]] = {}
-
-
 def _hashed_documents(spark, sf_dir, *, augmented: bool, cache: bool = True):
+    """The documents (``augmented``: plus replica plants) with their
+    64-hex content hash ``h``.  Cached by default in the session cache:
+    every admission builder consumes batch/corpus from MULTIPLE subplans
+    (group mins + joins), and Spark recomputes the full union+sha2
+    lineage per consumer otherwise (the SURVEY §7
+    cache-shared-subplans lesson)."""
     import os
 
-    if os.environ.get("SPARK_GRAFT_CACHE") == "0":
-        cache = False  # plan dumps need the file scans visible (io.load rule)
-    if not cache:
+    def hashed():
         d = (
             _augmented_documents(spark, sf_dir)
             if augmented
             else load(spark, sf_dir, "documents").select("doc_id", "text", "source")
         )
         return d.withColumn("h", F.sha2("text", 256))
-    per = _SPLIT_CACHE.get(sf_dir)
-    if per is None:
-        for old_dir in list(_SPLIT_CACHE):
-            for df in _SPLIT_CACHE.pop(old_dir).values():
-                try:
-                    df.unpersist(blocking=False)
-                except Exception:
-                    pass  # the old relation's session may already be stopped
-        per = _SPLIT_CACHE.setdefault(sf_dir, {})
-    if augmented not in per:
+
+    if os.environ.get("SPARK_GRAFT_CACHE") == "0":
+        cache = False  # plan dumps need the file scans visible (io.load rule)
+    if not cache:
+        return hashed()
+    # One corpus is live: caching a new corpus's relation releases the
+    # previous corpus's (restage), so tests fuzzing over fresh tmp dirs do
+    # not leak a cached relation each (ADVICE r10).
+    key = ("split", sf_dir, augmented)
+    if key not in session_cache.entries(spark):
         # r17 (guide §2.5): the documents scan is ONE parquet file at
         # every bench SF, so the sha256 pass and the cached layout every
         # _split consumer (incremental dedup family, both admission
@@ -1669,12 +1664,11 @@ def _hashed_documents(spark, sf_dir, *, augmented: bool, cache: bool = True):
         # all consumers keyed/ordered, so layout is semantics-free).
         # The cache=False path keeps the trivial scan-visible plan the
         # plan-pinning tests rely on.
-        per[augmented] = (
-            _hashed_documents(spark, sf_dir, augmented=augmented, cache=False)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .cache()
+        session_cache.restage(
+            spark, key,
+            hashed().repartition(spark.sparkContext.defaultParallelism),
         )
-    return per[augmented]
+    return session_cache.entries(spark)[key]
 
 
 def _split(spark, sf_dir, *, augmented: bool = True, cache: bool = True):
@@ -1795,12 +1789,6 @@ def dedup_incremental_audit(spark, sf_dir):
     )
 
 
-# Bounded-lifetime cache (the minhash_pairs pattern, ADVICE r10): the two
-# staged feature relations feed lsh.fit and both join sides; each call
-# evicts the previous call's relations.
-_INC_STAGED_LAST: list[DataFrame] = []
-
-
 def incremental_minhash_hits(
     index_docs: DataFrame,
     batch_docs: DataFrame,
@@ -1827,16 +1815,14 @@ def incremental_minhash_hits(
 
     def stage(docs):
         s = tf.transform(ngram.transform(tok.transform(docs)))
-        return s.filter(F.size("shingles") >= 1).cache()
+        return s.filter(F.size("shingles") >= 1)
 
-    global _INC_STAGED_LAST
-    for old in _INC_STAGED_LAST:
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass  # the old relation's session may already be stopped
-    idx_staged, batch_staged = stage(index_docs), stage(batch_docs)
-    _INC_STAGED_LAST = [idx_staged, batch_staged]
+    # the two staged feature relations feed lsh.fit and both join sides;
+    # each call releases the previous call's pair (cache.restage)
+    idx_staged, batch_staged = session_cache.restage(
+        index_docs.sparkSession, ("incremental_minhash", None),
+        stage(index_docs), stage(batch_docs),
+    )
 
     lsh = MinHashLSH(
         inputCol="features", outputCol="hashes",

@@ -16,6 +16,7 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..io import load
 from ..registry import register
 
@@ -160,12 +161,6 @@ def dedup_near_exactjacc(spark, sf_dir):
     )
 
 
-# Last minhash_pairs / tfidf_keywords staged caches — evicted by the next
-# call of the same operator (bounded cache lifetime; see the cache sites).
-_MINHASH_STAGED_LAST: DataFrame | None = None
-_TFIDF_STAGED_LAST: DataFrame | None = None
-
-
 def minhash_pairs(docs: DataFrame, *, num_hash_tables: int = 5,
                   threshold: float = 0.2, shingle_n: int = 3,
                   seed: int = 42) -> DataFrame:
@@ -187,20 +182,12 @@ def minhash_pairs(docs: DataFrame, *, num_hash_tables: int = 5,
     )
     staged = tf.transform(ngram.transform(tok.transform(docs)))
     # LSH requires ≥1 non-zero feature: drop docs with <shingle_n words.
-    # The cache feeds both lsh.fit and both sides of the self-join, but a
-    # returned-lazy DF can't unpersist inside this function — so the
-    # lifetime is bounded instead: each call evicts the PREVIOUS call's
-    # staged relation (ADVICE r10: knob-varying repeated calls otherwise
-    # leak one cached relation per invocation into executor storage).
-    staged = staged.filter(F.size("shingles") >= 1)
-    global _MINHASH_STAGED_LAST
-    if _MINHASH_STAGED_LAST is not None:
-        try:
-            _MINHASH_STAGED_LAST.unpersist(blocking=False)
-        except Exception:
-            pass  # session of the old relation may already be stopped
-    staged = staged.cache()
-    _MINHASH_STAGED_LAST = staged
+    # The cache feeds both lsh.fit and both sides of the self-join; each
+    # call releases the previous call's staged relation (cache.restage).
+    staged = cache.restage(
+        docs.sparkSession, ("minhash_pairs", None),
+        staged.filter(F.size("shingles") >= 1),
+    )
     lsh = MinHashLSH(
         inputCol="features", outputCol="hashes",
         numHashTables=num_hash_tables, seed=seed,
@@ -269,40 +256,24 @@ TWIN_CAPS_APPLIED: dict[str, tuple[int, int]] = {}
 #: for these twins, not just their quadratic-cost bound.
 SCORER_BCAST_MAX_BYTES = 64 << 20
 
-# Session-scoped memo for the vectorized twins' collected+broadcast
-# corpus (ADVICE r16: each invocation used to create a fresh ~26 MB
-# broadcast that was never destroyed, accumulating on driver and
-# executors for the session lifetime).  INPUT staging, not result
-# caching — the value is a deterministic projection of the immutable
-# per-sf_dir embeddings table (the events-staging-memo pattern); keyed
-# by (key, sf_dir, audit-cap env) so audit-capped and uncapped corpora
-# never alias.  Dies with the session object.
-_SCORER_MEMO_ATTR = "_bigdatawork_scorer_corpus_memo"
-
-
 def _corpus_broadcast(spark, key: str, sf_dir: str, build):
     """``(broadcast, frame)`` for ``build() -> (broadcast, pandas frame)``,
-    memoized per session.  The collected frame (~26 MB at the twin cap) is
-    kept only when the audit mode capped ``key``'s input: the caller then
-    re-derives its probe side from it.  Otherwise ``frame`` is None and
-    the memo pins just the broadcast handle."""
-    import os
+    memoized in the session cache (ADVICE r16: each invocation used to
+    create a fresh ~26 MB broadcast that was never released).  INPUT
+    staging, not result caching — the value is a deterministic projection
+    of the immutable per-sf_dir embeddings table; keyed by the audit-cap
+    env too, so audit-capped and uncapped corpora never alias.  The
+    collected frame (~26 MB at the twin cap) is kept only when the audit
+    mode capped ``key``'s input: the caller then re-derives its probe side
+    from it.  Otherwise ``frame`` is None and the memo pins just the
+    broadcast handle."""
 
-    memo = getattr(spark, _SCORER_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        try:
-            setattr(spark, _SCORER_MEMO_ATTR, memo)
-        except Exception:
-            memo = None  # un-taggable session: build per call
-    cache_key = (key, sf_dir, os.environ.get(TWIN_AUDIT_ENV))
-    if memo is not None and cache_key in memo:
-        return memo[cache_key]
-    bc, frame = build()
-    val = (bc, frame if key in TWIN_CAPS_APPLIED else None)
-    if memo is not None:
-        memo[cache_key] = val
-    return val
+    def fill():
+        bc, frame = build()
+        return bc, (frame if key in TWIN_CAPS_APPLIED else None)
+
+    audit = os.environ.get(TWIN_AUDIT_ENV)
+    return cache.memo(spark, ("scorer", sf_dir, key, audit), fill)
 
 
 def guard_twin_size(df: DataFrame, key: str, production_key: str,
@@ -387,50 +358,35 @@ n AS (
 """
 
 
-# Probe matrix + sc.broadcast memoized per sf_dir ON the session object
-# (io.py's pattern): the probe set is constant for a given corpus, so the
-# bounded collect + broadcast happens once per session instead of on every
-# DataFrame construction (plan-lint sweeps, bench rebuilds — r05 review).
-_PROBE_ATTR = "_bigdatawork_cosine_probes"
-
-
 def _cosine_probe_broadcast(spark, sf_dir, e):
     """Broadcast (probe_ids, probe_matrix, probe_norms) for vec_id ≤ 5,
-    or None when the probe set is empty.
+    or None when the probe set is empty.  Memoized per corpus in the
+    session cache: the probe set is constant for a given corpus, so the
+    bounded collect + broadcast happens once per session instead of on
+    every DataFrame construction (plan-lint sweeps, bench rebuilds — r05
+    review).
 
     Unlike the io.py handle memo (lazy plans that re-read on each action),
     this snapshots MATERIALIZED values — so the memo key includes the
     embeddings parquet's mtime: rewriting the file at the same path
     invalidates the entry instead of silently serving stale probes
     (r05 review)."""
-    import os
-
     import numpy as np
 
-    memo = getattr(spark, _PROBE_ATTR, None)
-    if memo is None:
-        memo = {}
-        try:
-            setattr(spark, _PROBE_ATTR, memo)
-        except Exception:
-            pass  # un-taggable session: degrade to re-collecting per call
+    def fill():
+        probes = e.where("vec_id <= 5").collect()  # bounded (≤6 rows)
+        if not probes:
+            return None
+        pid = np.array([r["vec_id"] for r in probes], dtype=np.int64)
+        P = np.array([list(r["embedding"]) for r in probes], dtype=np.float64)
+        pnrm = np.sqrt((P * P).sum(axis=1))
+        return spark.sparkContext.broadcast((pid, P, pnrm))
+
     try:
         mtime = os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet"))
     except OSError:
         mtime = None  # non-standard layout: fall back to path-only keying
-    key = (sf_dir, mtime)
-    if key not in memo:
-        probes = e.where("vec_id <= 5").collect()  # bounded (≤6 rows)
-        if not probes:
-            memo[key] = None
-        else:
-            pid = np.array([r["vec_id"] for r in probes], dtype=np.int64)
-            P = np.array(
-                [list(r["embedding"]) for r in probes], dtype=np.float64
-            )
-            pnrm = np.sqrt((P * P).sum(axis=1))
-            memo[key] = spark.sparkContext.broadcast((pid, P, pnrm))
-    return memo[key]
+    return cache.memo(spark, ("probe", sf_dir, mtime), fill)
 
 
 @register(
@@ -987,21 +943,13 @@ def tfidf_keywords(spark, sf_dir):
 
     cap = int(os.environ.get("SPARK_GRAFT_TFIDF_VOCAB_CAP", "1000000"))
 
-    d = load(spark, sf_dir, "documents")
-    n_par = max(
-        d.rdd.getNumPartitions(), spark.sparkContext.defaultParallelism
-    )
-    # Same bounded-lifetime discipline as minhash_pairs (ADVICE r10
-    # class): each call evicts the previous call's staged cache, so the
-    # bench loop's repeated invocations hold at most one cached relation.
-    global _TFIDF_STAGED_LAST
-    if _TFIDF_STAGED_LAST is not None:
-        try:
-            _TFIDF_STAGED_LAST.unpersist(blocking=False)
-        except Exception:
-            pass  # the old relation's session may already be stopped
-    dd = d.select("doc_id", "text").repartition(n_par).cache()
-    _TFIDF_STAGED_LAST = dd
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    n_par = spark.sparkContext.defaultParallelism
+    if d.rdd.getNumPartitions() < n_par:
+        d = d.repartition(n_par)
+    # each call releases the previous call's staged relation, so the bench
+    # loop's repeated invocations hold at most one (cache.restage)
+    dd = cache.restage(spark, ("tfidf_keywords", None), d)
     df_rows = (
         dd.select(
             F.explode(
@@ -1013,7 +961,7 @@ def tfidf_keywords(spark, sf_dir):
         .limit(cap + 1)
         .collect()
     )
-    n_docs = float(d.count())
+    n_docs = float(dd.count())
     if len(df_rows) > cap:
         # Open-vocabulary corpus: no driver-side dict can hold the df
         # table, so degrade to the fully-distributed plan — token-level

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..io import load
 from ..registry import register
 
@@ -606,15 +607,6 @@ def ngram_contamination(docs, n: int = 8):
 # global_row_index
 # ---------------------------------------------------------------------------
 
-# Bounded-lifetime cache for the range-id-assigned relation: it feeds both
-# the per-range count pass and the final projection.  Since ADVICE r11 the
-# range id is a deterministic expression over literal boundaries, so the
-# cache is purely a scan-sharing optimisation — an eviction-forced
-# recompute yields identical placement.  Returned-lazy DFs can't unpersist
-# in-function, so each call evicts the previous call's relation (the
-# minhash_pairs / tfidf_keywords lifetime pattern, ADVICE r10).
-_ROWIDX_STAGED_LAST = None
-
 _ROWIDX_PARTITIONS = 16
 
 
@@ -680,18 +672,13 @@ def global_row_index(spark, sf_dir):
         ),
         F.lit(0),
     ).alias("pid")
-    rng = li.select("l_orderkey", "l_linenumber", pid_expr)
-
-    global _ROWIDX_STAGED_LAST
-    if _ROWIDX_STAGED_LAST is not None:
-        try:
-            _ROWIDX_STAGED_LAST.unpersist(blocking=False)
-        except Exception:
-            pass  # the old relation's session may already be stopped
-    # Cache is a pure optimisation now (two consumers: counts + final
-    # projection) — an eviction-forced recompute yields identical pids.
-    rng = rng.cache()
-    _ROWIDX_STAGED_LAST = rng
+    # Cached for its two consumers (counts + final projection), released
+    # by the next call (cache.restage).  A pure scan-sharing optimisation:
+    # an eviction-forced recompute yields identical pids.
+    rng = cache.restage(
+        spark, ("global_row_index", None),
+        li.select("l_orderkey", "l_linenumber", pid_expr),
+    )
 
     counts = rng.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).orderBy("pid")
     offsets, acc = [], 0

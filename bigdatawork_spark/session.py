@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import cache
+
 # The directory holding the bigdatawork_spark package.
 ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -65,25 +67,13 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# Sentinel attribute set on the SparkSession OBJECT (not an id()-keyed
-# module set): after a stopped session is GC'd, CPython can recycle its id
-# for a new session, which would then silently skip tuning (ADVICE r03).
-# Tagging the object itself dies with the object, so aliasing is impossible.
-_TUNED_ATTR = "_bigdatawork_tuned"
-
-
 def ensure_tuned(spark: SparkSession) -> SparkSession:
     """tune() once per session — each conf.set is a py4j round trip, and the
     confs stick for the session's lifetime.  Used by io.load AND the
     __spark_entry__ query wrappers, so even a builder that synthesizes its
     data inline (no table load) runs under UTC/AQE/shuffle settings when the
     driver order puts it first."""
-    if not getattr(spark, _TUNED_ATTR, False):
-        tune(spark)
-        try:
-            setattr(spark, _TUNED_ATTR, True)
-        except Exception:
-            pass  # un-taggable session object: re-tune per call (idempotent)
+    cache.memo(spark, ("tuned", None), lambda: tune(spark) is spark)  # a flag
     return spark
 
 

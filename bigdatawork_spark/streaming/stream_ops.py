@@ -23,6 +23,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..io import load
 from ..registry import register
 
@@ -52,34 +53,20 @@ def stamp_mtimes(src: str, order: int, stamped: set) -> None:
             os.utime(f, (t, t))
 
 
-# Default-source staging memo, ON the session object (io.py's pattern —
-# dies with the session, id-reuse-safe).  ~10 streaming keys stage the
-# IDENTICAL single-chunk copy of events; the staged dir is immutable
-# input (every query still computes from it with a fresh checkpoint), so
-# re-writing it per key was pure waste — measured 8.9 s cold / 2.1 s warm
-# per write at sf1.0, ~20 s/round across the streaming family (r16,
-# guide §1.2 "don't compute things you throw away").  Chunked callers
-# (batch-boundary-sensitive replays) keep fresh dirs.
-_SRC_MEMO_ATTR = "_bigdatawork_stream_src_memo"
+# Default-source staging memo (session cache, ns "stream_src").  ~10
+# streaming keys stage the IDENTICAL single-chunk copy of events; the
+# staged dir is immutable input (every query still computes from it with
+# a fresh checkpoint), so re-writing it per key was pure waste — measured
+# 8.9 s cold / 2.1 s warm per write at sf1.0, ~20 s/round across the
+# streaming family (r16, guide §1.2 "don't compute things you throw
+# away").  Chunked callers (batch-boundary-sensitive replays) keep fresh
+# dirs.
 
 
-def _get_memo(spark):
-    memo = getattr(spark, _SRC_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        try:
-            setattr(spark, _SRC_MEMO_ATTR, memo)
-        except Exception:
-            memo = None  # un-taggable session: stage per call
-    return memo
-
-
-def _memo_lookup(memo, key):
-    got = memo.get(key) if memo is not None else None
-    # guard against cleanup()/tmp-reaper having removed the dir
-    if got and glob.glob(os.path.join(got, "*.parquet")):
-        return got
-    return None
+def _has_parquet(src: str) -> bool:
+    # a memoized dir is reused only while it still holds its files (a tmp
+    # reaper may have removed it); otherwise it is staged again
+    return bool(glob.glob(os.path.join(src, "*.parquet")))
 
 
 def _events_source_dir(spark, sf_dir, chunks: list | None = None) -> str:
@@ -98,12 +85,15 @@ def _events_source_dir(spark, sf_dir, chunks: list | None = None) -> str:
     no default-staging consumer sets maxFilesPerTrigger, so it stays ONE
     micro-batch with identical rows.  Chunked callers keep one file per
     chunk — their file boundaries ARE the trigger boundaries."""
-    memo = None
     if chunks is None:
-        memo = _get_memo(spark)
-        got = _memo_lookup(memo, sf_dir)
-        if got:
-            return got
+        return cache.memo(
+            spark, ("stream_src", sf_dir),
+            lambda: _stage_events(spark, sf_dir, None), valid=_has_parquet,
+        )
+    return _stage_events(spark, sf_dir, chunks)
+
+
+def _stage_events(spark, sf_dir, chunks: list | None) -> str:
     src = _fresh_dir("src")
     ev = load(spark, sf_dir, "events")
     stamped: set = set()
@@ -115,8 +105,6 @@ def _events_source_dir(spark, sf_dir, chunks: list | None = None) -> str:
         for i, pred in enumerate(chunks):
             ev.filter(pred).coalesce(1).write.mode("append").parquet(src)
             stamp_mtimes(src, i, stamped)
-    if memo is not None:
-        memo[sf_dir] = src
     return src
 
 
@@ -130,11 +118,13 @@ def _sentinel_events_source_dir(spark, sf_dir) -> str:
     the default staging (r17, guide §1.2 — every query still computes
     from it with a fresh checkpoint).  The events chunk stays ONE file:
     it must land in one trigger under maxFilesPerTrigger=1."""
-    memo = _get_memo(spark)
-    key = (sf_dir, "__sentinel__")
-    got = _memo_lookup(memo, key)
-    if got:
-        return got
+    return cache.memo(
+        spark, ("stream_src", sf_dir, "sentinel"),
+        lambda: _stage_sentinel_events(spark, sf_dir), valid=_has_parquet,
+    )
+
+
+def _stage_sentinel_events(spark, sf_dir) -> str:
     src = _fresh_dir("src")
     ev = load(spark, sf_dir, "events")
     ev.coalesce(1).write.mode("append").parquet(src)
@@ -148,8 +138,6 @@ def _sentinel_events_source_dir(spark, sf_dir) -> str:
             " CAST(0.0 AS DOUBLE) AS value, '{}' AS props"
         ).coalesce(1).write.mode("append").parquet(src)
         stamp_mtimes(src, i + 1, stamped)
-    if memo is not None:
-        memo[key] = src
     return src
 
 
@@ -532,11 +520,6 @@ def stream_stream_left_join(spark, sf_dir):
         .filter(F.col("user_id") >= 0)
         .orderBy("first_id", "second_id")
     )
-
-
-def cleanup() -> None:
-    """Remove stream scratch dirs (best-effort)."""
-    shutil.rmtree(_STREAM_ROOT, ignore_errors=True)
 
 
 @register("stream_stateful_tws")

@@ -93,6 +93,7 @@ def test_entry_queries_tune_a_foreign_session(spark):
     UTC/AQE/shuffle confs before the first builder runs even when that
     builder never touches io.load (round-3 ensure_tuned wrapper)."""
     import __spark_entry__ as entry_mod
+    from bigdatawork_spark import cache
     from bigdatawork_spark import session as sess
 
     # simulate a fresh, never-tuned session without paying a JVM start:
@@ -100,8 +101,7 @@ def test_entry_queries_tune_a_foreign_session(spark):
     # UTC even if the collect fails — otherwise every later test in the
     # shared session runs under the wrong timezone (ADVICE r03).
     try:
-        if hasattr(spark, sess._TUNED_ATTR):
-            delattr(spark, sess._TUNED_ATTR)
+        cache.drop(spark, None)  # the session-wide entries: the tuned flag
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
         q = entry_mod.queries()
         # source_inline synthesizes data without loading any corpus table

@@ -437,9 +437,9 @@ def test_cosine_probe_memo_invalidates_on_rewrite(spark, tmp_path):
     _time.sleep(0.05)  # distinct mtime
     # rewrite with NO probe ids: a stale memo would still return rows
     _write_embeddings(tmp_path, [10, 11], [[1.0, 2.0], [3.0, 4.0]])
-    from bigdatawork_spark.io import drop_tables
+    from bigdatawork_spark import cache
 
-    drop_tables(spark, str(tmp_path))  # drop the table-handle memo too
+    cache.drop(spark, str(tmp_path))  # drop the table-handle memo too
     second = QUERIES["sim_cosine_topk"](spark, str(tmp_path)).collect()
     assert second == []
 

@@ -366,7 +366,7 @@ def test_sorted_cluster_cache_releases_window_sort(spark, sf_dir, monkeypatch):
     outputOrdering, so win_row_number's Window must read the cache with
     NO Sort node between them (the in-memory analog of a bucketed+sortBy
     table layout)."""
-    from bigdatawork_spark import io
+    from bigdatawork_spark import cache, io
 
     monkeypatch.setenv("SPARK_GRAFT_CACHE", "1")
     try:
@@ -380,7 +380,7 @@ def test_sorted_cluster_cache_releases_window_sort(spark, sf_dir, monkeypatch):
         assert "Sort [" not in between, plan
         assert "Exchange" not in between, plan
     finally:
-        io.drop_tables(spark, sf_dir)
+        cache.drop(spark, sf_dir)
 
 
 def test_dpp_prunes_fact_partitions(spark, sf_dir):
@@ -450,7 +450,7 @@ def test_tumbling_hour_projection_is_exchange_free(spark, sf_dir, monkeypatch):
     partial agg → final agg in one stage (the only Exchange lives inside
     the untimed InMemoryRelation fill).  Values must be identical to the
     non-cache path row-for-row."""
-    from bigdatawork_spark.io import drop_tables
+    from bigdatawork_spark import cache
 
     # non-cache reference rows (the driver-correctness path)
     ref = sorted(
@@ -468,7 +468,32 @@ def test_tumbling_hour_projection_is_exchange_free(spark, sf_dir, monkeypatch):
         assert got == ref
         # the projection is a SECOND cache entry, keyed separately from the
         # primary layout — both must be resident and sf-scoped for eviction
-        store = getattr(spark, "_bigdatawork_table_cache", None) or {}
+        store = {k[1:]: v for k, v in cache.entries(spark).items() if k[0] == "table"}
         assert any(len(k) == 3 and k[2] == "hour" for k in store), list(store)
     finally:
-        drop_tables(spark, sf_dir)
+        cache.drop(spark, sf_dir)
+
+
+def test_tfidf_spreads_only_a_narrow_scan(spark, sf_dir, monkeypatch):
+    """tfidf_keywords round-robins its documents to core width only when
+    the input has fewer partitions than defaultParallelism: the one-file
+    scan is spread, the bench cache's 8-partition layout is read as is
+    on a host with at most 8 cores (no RoundRobinPartitioning)."""
+    from bigdatawork_spark import cache, io
+
+    def check():
+        narrow = (
+            io.load(spark, sf_dir, "documents").rdd.getNumPartitions()
+            < spark.sparkContext.defaultParallelism
+        )
+        plan = plan_string(QUERIES["tfidf_keywords"](spark, sf_dir))
+        assert ("RoundRobinPartitioning" in plan) == narrow, plan
+        return narrow
+
+    assert check()  # the one-file scan
+    monkeypatch.setenv("SPARK_GRAFT_CACHE", "1")
+    try:
+        check()
+    finally:
+        cache.drop(spark, sf_dir)
+

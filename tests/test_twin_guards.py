@@ -13,6 +13,7 @@ import re
 
 import pytest
 
+from bigdatawork_spark import cache
 from bigdatawork_spark.operators import curation, llm_ops
 from bigdatawork_spark.operators.llm_ops import TWIN_MAX_ROWS, guard_twin_size
 from bigdatawork_spark.registry import ORACLES, QUERIES
@@ -208,7 +209,7 @@ def test_scorer_memo_pins_frame_only_on_audit_capped_path(
     an uncapped session's memo must hold just the broadcast handle."""
 
     def memo_entry(audit):
-        return getattr(spark, llm_ops._SCORER_MEMO_ATTR)[(key, sf_dir, audit)]
+        return cache.entries(spark)[("scorer", sf_dir, key, audit)]
 
     llm_ops.TWIN_CAPS_APPLIED.clear()
     monkeypatch.delenv(llm_ops.TWIN_AUDIT_ENV, raising=False)
